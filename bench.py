@@ -32,6 +32,68 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+# warmup: JVM + parquet footer caches + Arrow/python worker pool +
+# whole-stage-codegen JIT for the shared heavy substrates. One
+# query per substrate family — JVM agg, pandas-UDF worker pool,
+# shingle/dedup pipeline, vector HOFs, window frames, plus the
+# substrate families added in rounds 2-3: the ASA parse pipeline
+# (regexp + rules dim), Arrow binary kernels (mapInPandas), the
+# HOF sequence/chunk/md5 chain, the iterative checkpointed loop,
+# and the sign-bit LSH bucket join — so the first *timed* query of
+# each family measures the engine, not one-time generated-code
+# compilation (measured: the alphabetically first dedup query
+# otherwise pays ~30 s of JIT that every later family member then
+# skips). Substrate families added in rounds 6-7 and covered here
+# since r7: the co-occurrence strong-edge relation (shared by
+# degree/kcore/link-pred/triangle) via its cheapest member, and the
+# IVF cell index. The pagerank out-edge substrate is warmed through
+# the unregistered float-fixpoint library path — it persists the same
+# (src, dst, deg) relation and JITs the same power-step codegen
+# WITHOUT pre-running the graded quantized query itself. No warmup
+# query may fill a graded query's corpus-model memo (e.g. the PCA
+# basis): the timed pass pays its own model fits.
+WARMUP_QUERIES = (
+    "agg_count_by_key",
+    "udf_scalar_pandas",
+    "dedup_ngram_jaccard",
+    "embed_array_stats",
+    "window_lag_lead",
+    "firewall_rule_hits",
+    "multimodal_binary_features",
+    "doc_chunk_fixed_tokens",
+    "dedup_cluster_components",
+    "sim_ann_lsh",
+    "graph_degree_distribution",
+    "sim_ann_ivf",
+)
+
+
+def run(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warmup(spark, sf_dir: str) -> None:
+    """The one warmup every harness shares: the WARMUP_QUERIES, the
+    pagerank out-edge substrate, then the hot base tables."""
+    from ruleset_analysis_spark.operators.graph import pagerank_float_fixpoint
+    from ruleset_analysis_spark.plans.registry import all_specs
+    from ruleset_analysis_spark.sources.parquet import TABLE_NAMES, load
+
+    specs = all_specs()
+    for w in WARMUP_QUERIES:
+        run(specs[w].builder(spark, sf_dir))
+    run(pagerank_float_fixpoint(spark, sf_dir))
+
+    # Hot-run benchmarking: pin the base tables in memory and
+    # materialize them once, so per-query timings measure the engine
+    # (plans, shuffles, codegen), not repeated cold parquet IO. Spark's
+    # cache manager substitutes the InMemoryRelation for any identical
+    # load() plan. This mirrors a warm buffer pool / OS page cache in
+    # any single-node comparison run.
+    for t in TABLE_NAMES:
+        load(spark, sf_dir, t).cache().count()
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -44,59 +106,7 @@ def main() -> int:
 
     spark = get_spark(app_name="ruleset-analysis-bench", driver_memory="48g")
     specs = all_specs()
-
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # warmup: JVM + parquet footer caches + Arrow/python worker pool +
-    # whole-stage-codegen JIT for the shared heavy substrates. One
-    # query per substrate family — JVM agg, pandas-UDF worker pool,
-    # shingle/dedup pipeline, vector HOFs, window frames, plus the
-    # substrate families added in rounds 2-3: the ASA parse pipeline
-    # (regexp + rules dim), Arrow binary kernels (mapInPandas), the
-    # HOF sequence/chunk/md5 chain, the iterative checkpointed loop,
-    # sufficient-statistics partials, and the sign-bit LSH bucket
-    # join — so the first *timed* query of each family measures the
-    # engine, not one-time generated-code compilation (measured: the
-    # alphabetically first dedup query otherwise pays ~30 s of JIT
-    # that every later family member then skips). Substrate families
-    # added in rounds 6-7 and covered here since r7: the co-occurrence
-    # strong-edge relation (shared by degree/kcore/link-pred/triangle)
-    # via its cheapest member, and the IVF cell index. The pagerank
-    # out-edge substrate is warmed through the unregistered float-
-    # fixpoint library path — it persists the same (src, dst, deg)
-    # relation and JITs the same power-step codegen WITHOUT pre-running
-    # the graded quantized query itself.
-    for w in (
-        "agg_count_by_key",
-        "udf_scalar_pandas",
-        "dedup_ngram_jaccard",
-        "embed_array_stats",
-        "window_lag_lead",
-        "firewall_rule_hits",
-        "multimodal_binary_features",
-        "doc_chunk_fixed_tokens",
-        "dedup_cluster_components",
-        "embed_pca_project",
-        "sim_ann_lsh",
-        "graph_degree_distribution",
-        "sim_ann_ivf",
-    ):
-        run(specs[w].builder(spark, sf_dir))
-    from ruleset_analysis_spark.operators.graph import pagerank_float_fixpoint
-
-    run(pagerank_float_fixpoint(spark, sf_dir))
-
-    # Hot-run benchmarking: pin the base tables in memory and
-    # materialize them once, so per-query timings measure the engine
-    # (plans, shuffles, codegen), not repeated cold parquet IO. Spark's
-    # cache manager substitutes the InMemoryRelation for any identical
-    # load() plan. This mirrors a warm buffer pool / OS page cache in
-    # any single-node comparison run.
-    from ruleset_analysis_spark.sources.parquet import TABLE_NAMES, load
-
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).cache().count()
+    warmup(spark, sf_dir)
 
     # The graded `value` is the FIRST full sequential pass — same
     # methodology as a plain single-run suite, comparable against any

@@ -17,6 +17,7 @@ whole failure class at any scale and any partition order.
 from __future__ import annotations
 
 import hashlib
+import math
 
 from pyspark.sql import Column, SparkSession, functions as F
 
@@ -61,12 +62,6 @@ def floor_long(expr: Column) -> Column:
     convention as :func:`cents` (SCALE.md)."""
     ok = (~F.isnan(expr)) & (F.abs(expr) < F.lit(9.0e18))
     return F.when(ok, F.floor(expr)).otherwise(F.lit(None)).cast("long")
-
-
-def floor_cents_sql(expr: str, scale: str = "100.0") -> str:
-    """DuckDB twin of ``floor_long((expr) * scale)`` — the floored
-    exact-cents pattern used by the TPC-H revenue oracles."""
-    return f"TRY_CAST(floor(({expr}) * {scale}) AS BIGINT)"
 
 
 def bounded_block(df, key: str, cap: int, what: str):
@@ -129,8 +124,12 @@ def _sql_literal(v) -> str:
         return str(v)
     if isinstance(v, float):
         # repr is the shortest round-tripping decimal; the cast in
-        # values_df parses it back to the bit-identical double
-        return repr(v)
+        # values_df parses it back to the bit-identical double. NaN and
+        # ±inf have no SQL literal and a -0.0 literal parses as decimal
+        # zero, so those (and +0.0) go through a string cast instead
+        if math.isfinite(v) and v != 0.0:
+            return repr(v)
+        return f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, str):
         # Spark string literals understand backslash escapes, so both
         # the quote and the backslash must be doubled

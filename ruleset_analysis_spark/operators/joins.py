@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..plans.registry import register
+from ..session import corpus_memo
 from ..sources.parquet import load
 from ._util import cents
 
@@ -512,18 +513,13 @@ def join_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared substrate). Production shape is materialize-once/consume-4×:
 # the cached object is the persisted pair relation (canonical pairs ×
 # one BIGINT count — ~1/1000 of lineitem), so every consumer's lineage
-# starts at an in-memory columnar scan. Keyed on applicationId so a
-# stopped/new SparkContext never serves another context's cached
-# blocks, plus the corpus dir (harnesses that rewrite data use fresh
-# directories). Same memoization discipline as dedup._component_labels.
-_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+# starts at an in-memory columnar scan.
+@corpus_memo
 def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(part_a, part_b, n_orders) for every canonical (a<b) part pair
     co-occurring in ≥1 order — the shared substrate for market-basket
     mining and the co-occurrence graph (operators/graph.py), memoized
-    per (SparkContext, corpus) — see ``_PAIR_CACHE``.
+    per (SparkContext, corpus).
 
     Shape: collect each basket's distinct sorted parts (ONE exchange,
     keyed on orderkey — collect_set dedups in-agg, no pre-distinct
@@ -536,10 +532,6 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra inside codegen."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
     baskets = (
         load(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
@@ -554,15 +546,13 @@ def basket_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    out = (
+    return (
         baskets.select(F.explode(pair_structs).alias("p"))
         .select("p.part_a", "p.part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _PAIR_CACHE[key] = out
-    return out
 
 
 @register(

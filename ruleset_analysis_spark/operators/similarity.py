@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions.vectors import as_double, dot, norm
 from ..plans.registry import register
+from ..session import corpus_memo
 from ..sources.parquet import load
 from ._util import bounded_block
 
@@ -858,34 +859,30 @@ def _quantized(e: DataFrame) -> DataFrame:
 # re-trains the quantizer per query). A cache hit skips the seed
 # collect AND the 16-fold assignment codegen; the probe-side work
 # (cell ranking + in-cell exact re-rank) stays per-call because it IS
-# the query. Same cache-key discipline as joins._PAIR_CACHE.
-_IVF_INDEX_CACHE: dict[tuple[str, str], tuple[list, DataFrame]] = {}
-
-
-def _ivf_index(
-    spark: SparkSession, sf_dir: str
-) -> tuple[list, DataFrame]:
-    """(seed_qs, assigned): the nlist quantized seed vectors (driver
-    side, model parameters) and the persisted (vec_id, vn, cell)
-    assignment relation."""
-    from pyspark import StorageLevel
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _IVF_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-
-    qv = _quantized(normalized_vectors(spark, sf_dir))
-    # nlist seed vectors by md5 order — deterministic, scale-stable,
-    # and O(nlist·d) to the driver (model parameters, like the KMeans
-    # centroid matrix this replaces)
+# the query.
+@corpus_memo
+def _ivf_seeds(spark: SparkSession, sf_dir: str) -> list:
+    """The nlist quantized seed vectors (driver side, model
+    parameters): picked by md5 order — deterministic, scale-stable,
+    and O(nlist·d) to the driver, like the KMeans centroid matrix they
+    replace."""
     seeds = (
-        qv.select("vec_id", "q")
+        _quantized(normalized_vectors(spark, sf_dir))
+        .select("vec_id", "q")
         .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(_IVF_NLIST)
         .collect()
     )
-    seed_qs = [row["q"] for row in seeds]
+    return [row["q"] for row in seeds]
+
+
+@corpus_memo
+def _ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted (vec_id, vn, cell) assignment relation."""
+    from pyspark import StorageLevel
+
+    qv = _quantized(normalized_vectors(spark, sf_dir))
+    seed_qs = _ivf_seeds(spark, sf_dir)
 
     # per-vector cell assignment: 16 integer dot folds over literal
     # seed arrays + first-max argmax, all inside whole-stage codegen
@@ -898,15 +895,13 @@ def _ivf_index(
         )
 
     scores = F.array(*[int_dot(s) for s in seed_qs])
-    assigned = qv.select(
+    return qv.select(
         "vec_id",
         "vn",
         (F.array_position(scores, F.array_max(scores)) - 1)
         .cast("int")
         .alias("cell"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    _IVF_INDEX_CACHE[key] = (seed_qs, assigned)
-    return seed_qs, assigned
 
 
 @register(
@@ -992,7 +987,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest cells up to quantization (|Δcos| ≤ d/1e6 ≈ 6e-5), so cell
     routing agrees with the cosine ranking it prunes for."""
     e = normalized_vectors(spark, sf_dir)
-    seed_qs, assigned = _ivf_index(spark, sf_dir)
+    seed_qs = _ivf_seeds(spark, sf_dir)
+    assigned = _ivf_cells(spark, sf_dir)
 
     pid = _probe_id(e)
     probe_row = (
@@ -1135,9 +1131,49 @@ def embed_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KM_K = 4
 _KM_ITERS = 3
-# Fitted Lloyd centroids per (SparkContext, corpus) — see the memo
-# note in embed_kmeans_clusters.
-_KM_CENTROID_CACHE: dict = {}
+
+
+# r10: the FITTED centroids are memoized per (SparkContext, corpus) —
+# the Lloyd fit is a corpus-constant model, the same memoized-probe
+# class as the PCA basis / LSH depth counts; the report pass in
+# embed_kmeans_clusters still computes from the vectors on every run.
+@corpus_memo
+def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> list[list[int]]:
+    e = _quantized(normalized_vectors(spark, sf_dir)).select("vec_id", "q")
+    # the _KM_K LOWEST ids, whatever they are — `vec_id < _KM_K`
+    # assumed ids 0..3 exist and IndexError'd on a renumbered
+    # corpus (caught by scripts/fuzz_sweep.py); orderBy+limit is a
+    # TakeOrdered of k rows
+    seeds = e.orderBy("vec_id").limit(_KM_K).collect()
+    centroids = [list(r["q"]) for r in seeds]
+
+    # _KM_ITERS assignment rounds = _KM_ITERS − 1 centroid
+    # updates + the report pass (the final assignment IS
+    # the report — the old form also reported the last assignment
+    # round, it just computed one extra never-consumed update
+    # alongside it)
+    for _ in range(_KM_ITERS - 1):
+        sums = (
+            e.mapInPandas(
+                _km_partials_kernel(centroids, want="means"),
+                "cluster int, dim int, s long, n long",
+            )
+            .groupBy("cluster", "dim")
+            .agg(
+                F.round(F.sum("s") / F.sum("n")).cast("long").alias("m")
+            )
+            .collect()
+        )
+        by_cluster: dict[int, dict[int, int]] = {}
+        for r in sums:
+            by_cluster.setdefault(r["cluster"], {})[r["dim"]] = r["m"]
+        centroids = [
+            [by_cluster[j][d] for d in range(len(centroids[j]))]
+            if j in by_cluster
+            else centroids[j]
+            for j in range(_KM_K)
+        ]
+    return centroids
 
 
 def _kmeans_oracle() -> str:
@@ -1329,47 +1365,7 @@ def embed_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids' is assigned cluster 0 with NULL dist and excluded
     from the mean sums."""
     e = _quantized(normalized_vectors(spark, sf_dir)).select("vec_id", "q")
-    # r10: the FITTED centroids are memoized per (SparkContext,
-    # corpus) — the Lloyd fit is a corpus-constant model, the same
-    # memoized-probe class as the PCA basis / LSH depth counts; the
-    # report pass below still computes from the vectors on every run.
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    centroids = _KM_CENTROID_CACHE.get(memo_key)
-    if centroids is None:
-        # the _KM_K LOWEST ids, whatever they are — `vec_id < _KM_K`
-        # assumed ids 0..3 exist and IndexError'd on a renumbered
-        # corpus (caught by scripts/fuzz_sweep.py); orderBy+limit is a
-        # TakeOrdered of k rows
-        seeds = e.orderBy("vec_id").limit(_KM_K).collect()
-        centroids = [list(r["q"]) for r in seeds]
-
-        # _KM_ITERS assignment rounds = _KM_ITERS − 1 centroid
-        # updates + the report pass below (the final assignment IS
-        # the report — the old form also reported the last assignment
-        # round, it just computed one extra never-consumed update
-        # alongside it)
-        for _ in range(_KM_ITERS - 1):
-            sums = (
-                e.mapInPandas(
-                    _km_partials_kernel(centroids, want="means"),
-                    "cluster int, dim int, s long, n long",
-                )
-                .groupBy("cluster", "dim")
-                .agg(
-                    F.round(F.sum("s") / F.sum("n")).cast("long").alias("m")
-                )
-                .collect()
-            )
-            by_cluster: dict[int, dict[int, int]] = {}
-            for r in sums:
-                by_cluster.setdefault(r["cluster"], {})[r["dim"]] = r["m"]
-            centroids = [
-                [by_cluster[j][d] for d in range(len(centroids[j]))]
-                if j in by_cluster
-                else centroids[j]
-                for j in range(_KM_K)
-            ]
-        _KM_CENTROID_CACHE[memo_key] = centroids
+    centroids = _kmeans_centroids(spark, sf_dir)
     return (
         e.mapInPandas(
             _km_partials_kernel(centroids, want="report"),

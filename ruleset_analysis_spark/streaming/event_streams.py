@@ -35,15 +35,35 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..session import ensure_session_defaults, shuffle_partitions
+from ..session import corpus_memo, ensure_session_defaults, shuffle_partitions
 
-# Physical-schema probe results per (application, directory, glob):
-# the probe is a driver-side parquet footer read whose answer cannot
-# change within a session over the immutable graded corpora, and every
-# stream_exec_* builder pays it otherwise (~0.25 s of schema
-# re-inference per bench invocation per query — same driver-overhead
-# class as the memoized batch load()).
-_PROBED_SCHEMAS: dict[tuple[str, str, str | None], T.StructType] = {}
+
+# Physical-schema probe results are memoized per (directory, glob): the
+# probe is a driver-side parquet footer read whose answer changes only
+# with the directory's files, and every stream_exec_* builder pays it
+# otherwise (~0.25 s of schema re-inference per bench invocation per
+# query — same driver-overhead class as the memoized batch load()).
+@corpus_memo
+def _physical_schema(
+    spark: SparkSession, events_dir: str, glob: str | None
+) -> T.StructType:
+    batch = spark.read
+    if glob is not None:
+        batch = batch.option("pathGlobFilter", glob)
+    try:
+        return batch.parquet(events_dir).schema
+    except Exception:  # empty/absent dir: bootstrap from the contract
+        from .. import schemas
+
+        return T.StructType(
+            [
+                T.StructField(
+                    f.name,
+                    T.TimestampNTZType() if f.name == "ts" else f.dataType,
+                )
+                for f in schemas.EVENTS.fields
+            ]
+        )
 
 
 def read_event_stream(
@@ -73,31 +93,7 @@ def read_event_stream(
     streaming one table out of a shared corpus directory is
     directory + glob, not a file path."""
     ensure_session_defaults(spark)
-    probe_key = (spark.sparkContext.applicationId, events_dir, glob)
-    physical = _PROBED_SCHEMAS.get(probe_key)
-    if physical is None:
-        batch = spark.read
-        if glob is not None:
-            batch = batch.option("pathGlobFilter", glob)
-        try:
-            physical = batch.parquet(events_dir).schema
-        except Exception:  # empty/absent dir: bootstrap from the contract
-            from .. import schemas
-
-            physical = T.StructType(
-                [
-                    T.StructField(
-                        f.name,
-                        T.TimestampNTZType() if f.name == "ts" else f.dataType,
-                    )
-                    for f in schemas.EVENTS.fields
-                ]
-            )
-        else:
-            # only memoize real probe results: the bootstrap fallback
-            # must re-probe once files appear (streaming-first start)
-            _PROBED_SCHEMAS[probe_key] = physical
-    reader = spark.readStream.schema(physical)
+    reader = spark.readStream.schema(_physical_schema(spark, events_dir, glob))
     if glob is not None:
         reader = reader.option("pathGlobFilter", glob)
     if max_files_per_trigger is not None:
@@ -190,10 +186,14 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-# Backlog row counts per (application, corpus dir): one count over the
+# Backlog row counts are memoized per corpus: one count over the
 # memoized batch relation (cache-hot under the bench protocol) sizes
 # the state-store partitioning for every drain of that corpus.
-_BACKLOG_ROWS: dict[tuple[str, str], int] = {}
+@corpus_memo
+def _backlog_rows(spark: SparkSession, sf_dir: str) -> int:
+    from ..sources.parquet import load
+
+    return load(spark, sf_dir, "events").count()
 
 
 def backlog_state_partitions(spark: SparkSession, sf_dir: str) -> int:
@@ -213,13 +213,7 @@ def backlog_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     backfill gets the ceiling — partitioning scales with the data, not
     with the local core count. Values are partitioning-invariant (the
     differential and the batch-equivalence tests hold at any count)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    n = _BACKLOG_ROWS.get(key)
-    if n is None:
-        from ..sources.parquet import load
-
-        n = load(spark, sf_dir, "events").count()
-        _BACKLOG_ROWS[key] = n
+    n = _backlog_rows(spark, sf_dir)
     return max(4, min(shuffle_partitions(spark) * 32, n // 500_000))
 
 

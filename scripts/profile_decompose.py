@@ -32,6 +32,7 @@ def main() -> int:
     ap.add_argument("--out", default="/tmp/profile_decompose.json")
     args = ap.parse_args()
 
+    from bench import run, warmup
     from ruleset_analysis_spark.plans.registry import all_specs
     from ruleset_analysis_spark.session import get_spark
 
@@ -39,33 +40,7 @@ def main() -> int:
     specs = all_specs()
     names = args.names or sorted(specs)
 
-    def run(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-
-    # identical warmup + hot base tables to bench.py
-    for w in (
-        "agg_count_by_key",
-        "udf_scalar_pandas",
-        "dedup_ngram_jaccard",
-        "embed_array_stats",
-        "window_lag_lead",
-        "firewall_rule_hits",
-        "multimodal_binary_features",
-        "doc_chunk_fixed_tokens",
-        "dedup_cluster_components",
-        "embed_pca_project",
-        "sim_ann_lsh",
-        "graph_degree_distribution",
-        "sim_ann_ivf",
-    ):
-        run(specs[w].builder(spark, args.sf))
-    from ruleset_analysis_spark.operators.graph import pagerank_float_fixpoint
-
-    run(pagerank_float_fixpoint(spark, args.sf))
-    from ruleset_analysis_spark.sources.parquet import TABLE_NAMES, load
-
-    for t in TABLE_NAMES:
-        load(spark, args.sf, t).cache().count()
+    warmup(spark, args.sf)
 
     out: dict[str, dict[str, float]] = {}
     for name in names:

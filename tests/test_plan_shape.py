@@ -596,15 +596,22 @@ def test_values_df_matches_create_dataframe(spark):
     from ruleset_analysis_spark.operators._util import values_df
 
     rows = [
-        (1, "plain", True, None),
-        (2, None, False, 12345678901234),
-        (3, "quo'te and back\\slash", None, -7),
+        (1, "plain", True, None, 0.1),
+        (2, None, False, 12345678901234, None),
+        (3, "quo'te and back\\slash", None, -7, 1.5e300),
+        # special floats: no plain SQL literal round-trips these
+        (4, "nan", None, None, float("nan")),
+        (5, "inf", None, None, float("inf")),
+        (6, "-inf", None, None, float("-inf")),
+        (7, "-0.0", None, None, -0.0),
+        (8, "subnormal", None, None, 5e-324),
     ]
-    ddl = "a int, b string, ok boolean, big long"
+    ddl = "a int, b string, ok boolean, big long, x double"
     ref = spark.createDataFrame(rows, ddl)
     got = values_df(spark, rows, ddl)
     assert got.schema == ref.schema
-    assert got.collect() == ref.collect()
+    # repr keeps NaN equal to itself and -0.0 apart from 0.0
+    assert repr(got.collect()) == repr(ref.collect())
     opt = got._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in opt and "ExistingRDD" not in opt
 

@@ -621,3 +621,70 @@ def test_text_format_roundtrips_preserve_nasty_values(spark, tmp_path):
         for r in read_json(spark, json_dir, schema).collect()
     }
     assert got_json == want
+
+
+def test_memoized_substrates_follow_an_in_place_rewrite(spark, tmp_path):
+    """A corpus rewritten in place mid-session must never be answered
+    from the substrates memoized over its old files: the pair relation,
+    the PageRank edges and node count, the k-means centroids, the PCA
+    basis and the IVF index all rebuild, each query matches its oracle
+    on the new files, and the stale persisted pair relation is
+    released."""
+    import shutil
+
+    import pyarrow.parquet as pq
+    from conftest import SF_DIR
+
+    from ruleset_analysis_spark.operators.joins import basket_pair_counts
+    from ruleset_analysis_spark.oracle import compare, duck_connect
+    from ruleset_analysis_spark.plans.registry import all_specs
+
+    src = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    sf_dir = str(tmp_path / "corpus")
+    os.mkdir(sf_dir)
+    for f in os.listdir(src):
+        shutil.copyfile(os.path.join(src, f), os.path.join(sf_dir, f))
+    specs = all_specs()
+    names = (
+        "join_cooccur_baskets",
+        "graph_pagerank_cooccur",
+        "embed_kmeans_clusters",
+        "embed_pca_project",
+        "sim_ann_ivf",
+    )
+    for n in names:
+        specs[n].builder(spark, sf_dir).collect()
+    stale = basket_pair_counts(spark, sf_dir)
+    assert stale.is_cached
+
+    for table in ("lineitem", "embeddings"):
+        path = os.path.join(sf_dir, f"{table}.parquet")
+        t = pq.read_table(path)
+        pq.write_table(t.take(list(range(0, t.num_rows, 3))), path)
+
+    con = duck_connect(sf_dir)
+    try:
+        for n in names:
+            res = compare(n, specs[n].builder(spark, sf_dir), con, specs[n].oracle)
+            assert res.ok, (n, res.problems[:3])
+    finally:
+        con.close()
+    assert not stale.is_cached
+
+
+def test_only_the_session_module_keys_on_the_application():
+    """Per-application memos live in ``session.corpus_memo`` alone; an
+    operator keying its own dict on ``applicationId`` would bring back
+    a memo that never sees its corpus change."""
+    import ruleset_analysis_spark
+
+    pkg = os.path.dirname(ruleset_analysis_spark.__file__)
+    offenders = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            if f.endswith(".py") and path != os.path.join(pkg, "session.py"):
+                with open(path) as fh:
+                    if "applicationId" in fh.read():
+                        offenders.append(os.path.relpath(path, pkg))
+    assert offenders == []
