@@ -2,9 +2,15 @@
 
 The reference's rule matching is fundamentally "is this hit's address
 inside this rule's network" ([R-mem] expanded object-groups); here that
-predicate is a pure Catalyst expression usable inside a join condition
-— whole-stage codegen, no UDF, so a hits⋈rules join with CIDR
-containment stays a broadcast hash/NLJ entirely in the JVM.
+predicate is pure Catalyst expression algebra — whole-stage codegen, no
+UDF, so a hits⋈rules join with CIDR containment stays entirely in the
+JVM.
+
+``ipv4_to_long`` owns the malformed-address contract and
+``cidr_bounds`` the malformed-CIDR one (NULL either way);
+``ip_in_cidr`` is ``lo <= addr <= hi`` over them. A join testing many
+addresses against many networks should project each side through them
+once and compare longs (``pipeline.match_flows_to_rules``).
 """
 
 from __future__ import annotations
@@ -39,27 +45,32 @@ def ipv4_to_long(ip: Column | str) -> Column:
     return F.when(ip.rlike(_IPV4_RE) & octets_valid, value)
 
 
-def ip_in_cidr(ip: Column | str, cidr: Column | str) -> Column:
-    """True iff dotted-quad ``ip`` is inside ``cidr`` ('a.b.c.d/p').
+def cidr_bounds(cidr: Column | str) -> tuple[Column, Column]:
+    """CIDR 'a.b.c.d/p' → its numeric ``(lo, hi)`` address range, both
+    bounds NULL when the CIDR is malformed — so no address is ever
+    ``between`` them.
 
-    Pure expression algebra: both sides reduce to
-    ``(addr & mask) == (net & mask)`` over longs — safe inside join
-    conditions and pushdown-friendly."""
+    Host bits are masked off ``lo`` ('10.0.1.5/24' spans
+    10.0.1.0-10.0.1.255), as the firewall reads such a statement."""
     cidr = F.col(cidr) if isinstance(cidr, str) else cidr
     parts = F.split(cidr, "/")
-    # try_element_at: a CIDR missing its '/prefix' yields NULL (⇒ no
-    # match) instead of an ANSI INVALID_ARRAY_INDEX abort
+    # try_element_at: a CIDR missing its '/prefix' yields NULL instead
+    # of an ANSI INVALID_ARRAY_INDEX abort
     net = ipv4_to_long(F.try_element_at(parts, F.lit(1)))
-    # A prefix outside 0..32 (e.g. '10.0.0.0/40') would compute
-    # mask = 2^32 - 0 and then (addr & mask) == (net & mask) collapses
-    # to 0 == 0 — the malformed CIDR would match EVERY address. Gate it
-    # to NULL instead, honouring the malformed-input contract.
+    # A prefix outside 0..32 names no block: '/-1' would span 2^33
+    # addresses (every address matches), '/40' a fraction of one that
+    # casts to 0. Gate it to NULL, honouring the malformed-input contract.
     raw_prefix = F.try_element_at(parts, F.lit(2)).try_cast("int")
     prefix = F.when(raw_prefix.between(0, 32), raw_prefix)
-    # mask = high `prefix` bits set = 2^32 - 2^(32-prefix); shiftleft
-    # needs a literal shift amount, but pow is exact in double up to 2^32
-    mask = (
-        F.lit(4294967296) - F.pow(F.lit(2.0), (F.lit(32) - prefix)).cast("long")
-    ).cast("long")
-    addr = ipv4_to_long(ip)
-    return addr.bitwiseAND(mask) == net.bitwiseAND(mask)
+    # block = 2^(32-prefix); shiftleft needs a literal shift amount, but
+    # pow is exact in double up to 2^32
+    block = F.pow(F.lit(2.0), F.lit(32) - prefix).cast("long")
+    lo = net.bitwiseAND(F.lit(4294967296) - block)
+    return lo, lo + block - 1
+
+
+def ip_in_cidr(ip: Column | str, cidr: Column | str) -> Column:
+    """True iff dotted-quad ``ip`` is inside ``cidr`` ('a.b.c.d/p');
+    NULL (never true) when either side is malformed."""
+    lo, hi = cidr_bounds(cidr)
+    return ipv4_to_long(ip).between(lo, hi)

@@ -238,5 +238,18 @@ def parse_asa_config(text: str) -> list[dict]:
 
 def rules_dataframe(spark: SparkSession, config_text: str) -> DataFrame:
     """Parsed+expanded ruleset as a declared-schema DataFrame — the
-    broadcast dimension for hit-count joins."""
-    return spark.createDataFrame(parse_asa_config(config_text), RULE_SCHEMA)
+    broadcast dimension for hit-count joins.
+
+    Built from an Arrow table, so it is a JVM ``LocalRelation``
+    (``LocalTableScan``): scanning it starts no Python worker, and a
+    projection over it folds at plan time. ``createDataFrame`` from
+    the list of dicts would build a pickled-RDD ``Scan ExistingRDD``
+    that forks Python workers on every scan. A config without any
+    access-list statement gives 0 rows with ``RULE_SCHEMA``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = pa.Table.from_pylist(
+        parse_asa_config(config_text), schema=to_arrow_schema(RULE_SCHEMA)
+    )
+    return spark.createDataFrame(rows, RULE_SCHEMA)

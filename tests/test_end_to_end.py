@@ -150,9 +150,34 @@ def test_run_ruleset_analysis_tolerates_dirty_lines(spark, tmp_path):
     report = run_ruleset_analysis(spark, str(d), CONFIG)
     rows = {(r["acl"], r["rule_id"]): r for r in report.collect()}
     assert rows[("OUTSIDE_IN", 1)]["hits"] == 3  # only the clean line counts
+    # the 999.1.2.3 line charges no rule at all, not even the catch-all
+    # 'deny ip any any' (0.0.0.0/0 contains every VALID address)
+    assert rows[("OUTSIDE_IN", 3)]["hits"] == 0
+    assert sum(r["hits"] for r in rows.values()) == 3
 
 
-def test_pipeline_cli_main(spark, archive, tmp_path):
+@pytest.mark.parametrize(
+    "config",
+    [
+        "access-list OUTSIDE_IN remark rules pending review\n",
+        "object-group network SRV\n network-object host 10.0.1.5\n",
+        "",
+    ],
+    ids=["remarks_only", "no_access_list", "empty"],
+)
+def test_run_ruleset_analysis_without_rules(spark, archive, config):
+    """A config with no rule statement is a valid (empty) ruleset: an
+    empty rule dimension with the declared schema and an empty report,
+    not an error."""
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    rules = asa_config.rules_dataframe(spark, config)
+    assert rules.schema == asa_config.RULE_SCHEMA
+    assert rules.count() == 0
+    assert run_ruleset_analysis(spark, archive, config).collect() == []
+
+
+def test_pipeline_cli_main(spark, archive, tmp_path, capsys):
     """The CLI entrypoint (run_analysis.sh analog): args in, partitioned
     parquet out, per-status summary printed. Reuses the test session
     via getOrCreate."""
@@ -162,6 +187,10 @@ def test_pipeline_cli_main(spark, archive, tmp_path):
     cfg.write_text(CONFIG)
     out = str(tmp_path / "report_out")
     assert main([archive, str(cfg), out]) == 0
+    assert capsys.readouterr().out.splitlines() == [
+        " ACTIVE: 2 rules, 200 hits",
+        " UNUSED: 2 rules, 0 hits",
+    ]
     back = spark.read.parquet(out)
     assert back.count() == 4  # 3 OUTSIDE_IN stmts + RETIRED
     assert {r["status"] for r in back.collect()} == {"ACTIVE", "UNUSED"}

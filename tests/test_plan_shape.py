@@ -639,3 +639,47 @@ def test_constant_dims_are_local_relations(spark, name):
     if name == "agg_countmin_sketch":
         assert "BroadcastNestedLoopJoin" not in plan
         assert "Range (" not in plan
+
+
+def test_firewall_job_plan_is_jvm_only_with_a_lean_scan_filter(spark, tmp_path):
+    """The flagship job (pipeline.run_ruleset_analysis) over a tiny gz
+    log: no pickled-RDD scan and no Python node anywhere; the broadcast
+    rule side is a LocalTableScan (its CIDR bounds folded at plan time);
+    and the per-line text-scan Filter carries no address parsing. A
+    null-intolerant predicate on a flow's parsed address would make
+    Catalyst infer an isnotnull filter and push it through the flow
+    aggregate into that Filter — the IPv4 rlike and another hit-regex
+    extraction on every log line."""
+    import gzip
+    import re
+
+    from ruleset_analysis_spark.pipeline import run_ruleset_analysis
+
+    with gzip.open(tmp_path / "fw.log.gz", "wt") as f:
+        f.write(
+            "%ASA-6-106100: access-list OUTSIDE_IN permitted tcp "
+            "outside/203.0.113.7(40000) -> dmz/10.0.1.5(443) hit-cnt 3 "
+            "300-second interval [0x1, 0x0]\n"
+        )
+    config = """
+object-group network SRV
+ network-object host 10.0.1.5
+access-list OUTSIDE_IN extended permit tcp any object-group SRV eq https
+access-list OUTSIDE_IN extended deny ip any any
+"""
+    report = run_ruleset_analysis(spark, str(tmp_path), config)
+    plan = report._jdf.queryExecution().executedPlan().toString()
+    lines = plan.splitlines()
+    # operator name of each plan line, tree drawing and codegen ids cut
+    nodes = [re.sub(r"^[\s:+\-|]*(\*\(\d+\)\s*)?", "", ln).split(" ")[0] for ln in lines]
+    assert "ExistingRDD" not in plan
+    assert not [n for n in nodes if "Python" in n or "Pandas" in n], nodes
+    assert any(
+        a == "BroadcastExchange" and b == "LocalTableScan" for a, b in zip(nodes, nodes[1:])
+    ), plan
+    scan = nodes.index("FileScan")
+    assert nodes[scan - 1] == "Filter", plan
+    scan_filter = lines[scan - 1]
+    assert "RLIKE" not in scan_filter.upper()
+    # the parent's two: acl != '' and the dst_port null check
+    assert scan_filter.count("regexp_extract(") <= 2, scan_filter

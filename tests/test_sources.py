@@ -149,6 +149,18 @@ def test_rules_dataframe_broadcast_join(spark, log_dir):
     assert {(r["acl"], r["rule_id"]) for r in unused.collect()} == {("STAGING", 1)}
 
 
+def test_rules_dataframe_is_a_local_relation(spark):
+    """The rule dimension is built from Arrow: the same schema and rows
+    as ``createDataFrame`` over the parsed dicts, but a JVM
+    LocalRelation rather than a pickled-RDD scan."""
+    rules = asa_config.rules_dataframe(spark, CONFIG)
+    ref = spark.createDataFrame(asa_config.parse_asa_config(CONFIG), asa_config.RULE_SCHEMA)
+    assert rules.schema == ref.schema == asa_config.RULE_SCHEMA
+    assert rules.collect() == ref.collect()
+    plan = rules._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
 def test_write_parquet_partitioned_roundtrip(spark, tmp_path):
     df = spark.range(100).withColumn("bucket", (F.col("id") % 3).cast("int"))
     out = str(tmp_path / "part")
@@ -170,19 +182,33 @@ def test_write_csv_single_file(spark, tmp_path):
     assert spark.read.option("header", True).csv(out).count() == 10
 
 
+CIDR_CASES = [
+    ("10.0.1.5", "10.0.1.5/32", True), ("10.0.1.6", "10.0.1.5/32", False),
+    ("10.0.2.7", "10.0.2.0/24", True), ("10.0.3.7", "10.0.2.0/24", False),
+    ("203.0.113.9", "0.0.0.0/0", True), ("255.255.255.255", "0.0.0.0/0", True),
+    ("192.168.1.1", "192.168.0.0/16", True), ("192.169.1.1", "192.168.0.0/16", False),
+    ("10.0.1.5", "10.0.1.4/31", True), ("10.0.1.6", "10.0.1.4/31", False),
+    ("0.0.0.0", "0.0.0.0/32", True), ("128.0.0.0", "128.0.0.0/1", True),
+    ("127.255.255.255", "128.0.0.0/1", False),
+]
+
+MALFORMED_CASES = [
+    ("10.0.1", "10.0.0.0/8"), ("1.2..4", "10.0.0.0/8"), ("", "10.0.0.0/8"),
+    ("10.0.1.5", "10.0.0.0"), ("10.0.1.5", ""), ("...", "/"),
+    ("999.1.1.1.2", "0.0.0.0/0"),
+    # out-of-range prefix: /33../99 must NOT collapse to match-all
+    ("10.0.1.5", "10.0.0.0/40"), ("10.0.1.5", "10.0.0.0/33"),
+    ("10.0.1.5", "10.0.0.0/99"), ("10.0.1.5", "10.0.0.0/-1"),
+    # out-of-range octets pass the \d{1,3} shape but are not IPs
+    ("999.1.1.1", "0.0.0.0/0"), ("256.0.0.1", "0.0.0.0/8"),
+    ("10.0.1.5", "256.0.0.0/8"),
+]
+
+
 def test_ip_in_cidr_edge_cases(spark):
     from ruleset_analysis_spark.functions.net import ip_in_cidr
 
-    cases = [
-        ("10.0.1.5", "10.0.1.5/32", True), ("10.0.1.6", "10.0.1.5/32", False),
-        ("10.0.2.7", "10.0.2.0/24", True), ("10.0.3.7", "10.0.2.0/24", False),
-        ("203.0.113.9", "0.0.0.0/0", True), ("255.255.255.255", "0.0.0.0/0", True),
-        ("192.168.1.1", "192.168.0.0/16", True), ("192.169.1.1", "192.168.0.0/16", False),
-        ("10.0.1.5", "10.0.1.4/31", True), ("10.0.1.6", "10.0.1.4/31", False),
-        ("0.0.0.0", "0.0.0.0/32", True), ("128.0.0.0", "128.0.0.0/1", True),
-        ("127.255.255.255", "128.0.0.0/1", False),
-    ]
-    df = spark.createDataFrame(cases, "ip string, cidr string, want boolean")
+    df = spark.createDataFrame(CIDR_CASES, "ip string, cidr string, want boolean")
     assert df.filter(ip_in_cidr("ip", "cidr") != F.col("want")).count() == 0
 
 
@@ -192,24 +218,54 @@ def test_ip_in_cidr_malformed_inputs_never_crash(spark):
     kill the job."""
     from ruleset_analysis_spark.functions.net import ip_in_cidr, ipv4_to_long
 
-    bad = [
-        ("10.0.1", "10.0.0.0/8"), ("1.2..4", "10.0.0.0/8"), ("", "10.0.0.0/8"),
-        ("10.0.1.5", "10.0.0.0"), ("10.0.1.5", ""), ("...", "/"),
-        ("999.1.1.1.2", "0.0.0.0/0"),
-        # out-of-range prefix: /33../99 must NOT collapse to match-all
-        ("10.0.1.5", "10.0.0.0/40"), ("10.0.1.5", "10.0.0.0/33"),
-        ("10.0.1.5", "10.0.0.0/99"), ("10.0.1.5", "10.0.0.0/-1"),
-        # out-of-range octets pass the \d{1,3} shape but are not IPs
-        ("999.1.1.1", "0.0.0.0/0"), ("256.0.0.1", "0.0.0.0/8"),
-        ("10.0.1.5", "256.0.0.0/8"),
-    ]
-    df = spark.createDataFrame(bad, "ip string, cidr string")
+    df = spark.createDataFrame(MALFORMED_CASES, "ip string, cidr string")
     out = df.select("ip", ip_in_cidr("ip", "cidr").alias("m"),
                     ipv4_to_long("ip").alias("addr")).collect()
     assert all(r["m"] is not True for r in out)   # NULL or False, never a match
     assert all(r["addr"] is None for r in [x for x in out if "." not in x["ip"] or x["ip"].count(".") != 3])
     # octet > 255 ⇒ whole address is NULL, not a >=2^32 value
     assert all(r["addr"] is None for r in out if r["ip"] in ("999.1.1.1", "256.0.0.1"))
+
+
+def _py_bounds(cidr: str):
+    """(lo, hi) of a well-formed 'a.b.c.d/p' by the standard library,
+    None for anything else (a bare address is not a CIDR here)."""
+    import ipaddress
+
+    if "/" not in cidr:
+        return None
+    try:
+        n = ipaddress.IPv4Network(cidr, strict=False)
+    except ValueError:
+        return None
+    return int(n.network_address), int(n.broadcast_address)
+
+
+def test_cidr_bounds_agree_with_ip_in_cidr(spark):
+    """``cidr_bounds`` is the one place the CIDR contract lives: its
+    bounds equal the standard library's network/broadcast addresses, a
+    malformed CIDR gets NULL bounds (so nothing is between them), and
+    ``lo <= ipv4_to_long(ip) <= hi`` decides exactly what
+    ``ip_in_cidr`` decides."""
+    from ruleset_analysis_spark.functions.net import cidr_bounds, ip_in_cidr, ipv4_to_long
+
+    pairs = [(ip, cidr) for ip, cidr, _ in CIDR_CASES] + MALFORMED_CASES
+    lo, hi = cidr_bounds("cidr")
+    out = spark.createDataFrame(pairs, "ip string, cidr string").select(
+        "ip", "cidr", lo.alias("lo"), hi.alias("hi"),
+        ipv4_to_long("ip").alias("addr"), ip_in_cidr("ip", "cidr").alias("m"),
+    ).collect()
+    assert len(out) == len(pairs)
+    for r in out:
+        want = _py_bounds(r["cidr"])
+        got = None if r["lo"] is None and r["hi"] is None else (r["lo"], r["hi"])
+        assert got == want, r
+        between = None not in (r["lo"], r["addr"], r["hi"]) and r["lo"] <= r["addr"] <= r["hi"]
+        assert (r["m"] is True) == between, r
+    # out-of-range prefixes name no block at all, never every address
+    for r in out:
+        if r["cidr"].endswith(("/33", "/40", "/99", "/-1")):
+            assert r["lo"] is None and r["hi"] is None, r
 
 
 def test_asa_remark_and_standard_lines():
